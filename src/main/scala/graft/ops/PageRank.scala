@@ -218,15 +218,19 @@ object PageRank {
         try {
           // absence-pinned creates: a RACING first build must lose
           // its CAS cleanly (ConcurrentCommitException to the
-          // caller), not interleave its three creates with ours
+          // caller), not interleave its three creates with ours. The
+          // meta create expects absence outright, not a pin read
+          // now: a build that completed since the check above must
+          // fail it, leaving the edges ahead of the meta row, which
+          // the next fold refuses as stale.
           val (_, edgesPin) = store.readPinnedOption(spark, edgesTable)
           val (_, countsPin) = store.readPinnedOption(spark, countsTable)
-          val (_, ev) = store.upsertBucketedPinnedVersioned(spark, d,
+          val (_, ev) = store.upsertBucketedPinned(spark, d,
             Seq("u", "v"), edgesPin, numBuckets)
           store.upsertBucketedPinned(spark, counts, Seq("id"),
             countsPin, numBuckets)
-          val (_, mv) = store.commitNewVersioned(spark, metaTable,
-            Seq(ev).toDF("edges_version"))
+          val (_, mv) = store.commitPinned(spark,
+            Seq(ev).toDF("edges_version"), CommitPin(metaTable, None, None))
           return (store.read(spark, countsTable), mv)
         } finally counts.unpersist(false)
       } finally d.unpersist(false)
@@ -257,7 +261,7 @@ object PageRank {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (deltaNew.limit(1).count() == 0)
-        return (countsDf, store.pinVersion(metaPin).get)
+        return (countsDf, metaPin.version.get)
       // stored adjacency + degrees: one scan of the edge artifact
       val adj = stored.select(col("u").as("n1"), col("v").as("n2"))
         .unionByName(stored.select(col("v").as("n1"), col("u").as("n2")))
@@ -321,11 +325,11 @@ object PageRank {
         // commit order IS the consistency protocol: edges, then the
         // touched counts, then the version marker (see scaladoc) —
         // each pinned to the snapshot this fold derived from
-        val (_, ev) = store.upsertBucketedPinnedVersioned(spark, deltaNew,
+        val (_, ev) = store.upsertBucketedPinned(spark, deltaNew,
           Seq("u", "v"), edgesPin, numBuckets)
         store.upsertBucketedPinned(spark, updated, Seq("id"),
           countsPin, numBuckets)
-        val (_, mv) = store.commitPinnedVersioned(spark,
+        val (_, mv) = store.commitPinned(spark,
           Seq(ev).toDF("edges_version"), metaPin)
         (store.read(spark, countsTable), mv)
       } finally incr.unpersist(false)
@@ -513,7 +517,9 @@ object PageRank {
       if (!have.head) {
         // first batch: from-scratch build (uniform start, the same
         // loop) with absence-pinned creates — a racing first build
-        // loses its CAS cleanly
+        // loses its CAS cleanly. The meta create expects absence
+        // outright (see [[triangleCountsAppendVersioned]]): a build
+        // that completed during this one's loop must fail it.
         val d = stage(canonicalDirected(newEdges, srcCol, dstCol))
         val nodes = stage(d.select(col("src").as("id"))
           .unionByName(d.select(col("dst").as("id"))).distinct())
@@ -524,11 +530,12 @@ object PageRank {
           nodes.select(col("id"), lit(1.0 / n).as("r")))
         val (_, edgesPin) = store.readPinnedOption(spark, edgesTable)
         val (_, ranksPin) = store.readPinnedOption(spark, ranksTable)
-        val (_, ev) = store.upsertBucketedPinnedVersioned(spark, d,
+        val (_, ev) = store.upsertBucketedPinned(spark, d,
           Seq("src", "dst"), edgesPin, numBuckets)
         store.commitPinned(spark, ranks, ranksPin)
-        val (_, mv) = store.commitNewVersioned(spark, metaTable,
-          Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"))
+        val (_, mv) = store.commitPinned(spark,
+          Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"),
+          CommitPin(metaTable, None, None))
         return (store.read(spark, ranksTable), mv)
       }
       val (metaDf, metaPin) = store.readPinned(spark, metaTable)
@@ -548,7 +555,7 @@ object PageRank {
       val deltaNew = stage(canonicalDirected(newEdges, srcCol, dstCol)
         .join(stored, Seq("src", "dst"), "left_anti"))
       if (deltaNew.limit(1).count() == 0)
-        return (ranksOld, store.pinVersion(metaPin).get)
+        return (ranksOld, metaPin.version.get)
       val e = stage(stored.unionByName(deltaNew))
       val nodes = stage(e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct())
@@ -560,10 +567,10 @@ object PageRank {
         nodes.join(ranksOld, Seq("id"), "left")
           .select(col("id"),
             coalesce(col("r") * lit(scale), lit(1.0 / n)).as("r")))
-      val (_, ev) = store.upsertBucketedPinnedVersioned(spark, deltaNew,
+      val (_, ev) = store.upsertBucketedPinned(spark, deltaNew,
         Seq("src", "dst"), edgesPin, numBuckets)
       store.commitPinned(spark, ranks, ranksPin)
-      val (_, mv) = store.commitPinnedVersioned(spark,
+      val (_, mv) = store.commitPinned(spark,
         Seq((ev, n, it)).toDF("edges_version", "n_nodes", "iters"), metaPin)
       (store.read(spark, ranksTable), mv)
     } finally freeAll()

@@ -73,14 +73,27 @@ import org.apache.spark.sql.functions._
   * (the SyncPipeline shape) and an insert-only reader can never see
   * an orphan child, only a parent whose child has not landed yet —
   * StoreCasSpec's two-table race pins exactly this contract.
+  *
+  * Write surface: snapshot tables publish through [[commit]] (CAS
+  * against the pointer at call time) or [[commitPinned]] (CAS against
+  * a [[readPinned]]/[[readPinnedOption]] pin — an absence pin is the
+  * create-only commit); bucketed tables through [[upsertBucketed]] /
+  * [[upsertBucketedPinned]]. All but [[commit]] return the version
+  * they published, which is what group commits name. Every snapshot
+  * publish runs `commitExpecting`; every touched-bucket rewrite
+  * (upsert, keyed and predicate delete, change-feed apply,
+  * maintenance compaction) runs `rewriteBuckets`.
   */
 /** Opaque token pairing a table with the pointer a
   * [[ParquetTableStore.readPinned]] resolved — the CAS expectation a
-  * later [[ParquetTableStore.commitPinned]] publishes against.
-  * Constructed only by the store (the pointer representation is
-  * private to the commit protocol). */
+  * later [[ParquetTableStore.commitPinned]] /
+  * [[ParquetTableStore.upsertBucketedPinned]] publishes against.
+  * `version` is the version that pointer names (None = pinned
+  * absence), so a no-op fold can report the state it corresponds to
+  * without re-reading the head. Constructed only by the store (the
+  * pointer representation is private to the commit protocol). */
 final case class CommitPin private[ops] (table: String,
-    private[ops] val pointer: Option[String])
+    private[ops] val pointer: Option[String], version: Option[Long])
 
 /** Opaque token for the MULTI-TABLE commit protocol: the (table →
   * version) vector a group marker named when [[ParquetTableStore
@@ -141,6 +154,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     else Some(new String(Files.readAllBytes(currentFile(table)),
       StandardCharsets.UTF_8).trim)
 
+  /** The live pointer of a table that must have one. */
+  private def livePointer(table: String): String =
+    currentPointer(table).getOrElse(throw new IllegalStateException(
+      s"table $table has no committed version"))
+
   def exists(table: String): Boolean = Files.exists(currentFile(table))
 
   def currentVersion(table: String): Option[Long] =
@@ -158,19 +176,19 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * and comparing its resolved version to the pin closes the window
     * where a commit landing between a version pre-check and a
     * [[read]] would silently mix snapshots ([[readBucketsOf]]'s
-    * existing contract, generalized to snapshot tables). */
+    * existing contract, generalized to snapshot tables). A table pair
+    * (A, B) whose B rows record the A-version they were derived from
+    * lets a consumer refuse a torn pair (read A, read B, check B's
+    * recorded version == A's resolved version); the stored BM25 index
+    * (postings + stats) is the shipped example. */
   def readVersioned(spark: SparkSession, table: String): (DataFrame, Long) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    (readDir(spark, table, dirNameOf(p)), versionOf(dirNameOf(p)))
+    val d = dirNameOf(livePointer(table))
+    (readDir(spark, table, d), versionOf(d))
   }
 
   /** The live snapshot. The internal bucket column never escapes. */
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    readDir(spark, table, dirNameOf(p))
-  }
+  def read(spark: SparkSession, table: String): DataFrame =
+    readDir(spark, table, dirNameOf(livePointer(table)))
 
   /** The live snapshot read through DIRECTORY LISTING (partition
     * discovery under the canonical schema) — the pre-manifest
@@ -181,9 +199,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * consumer path — it pays the O(files) metadata walk the manifest
     * exists to remove. */
   def readLegacy(spark: SparkSession, table: String): DataFrame = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val df = readVersionFrame(spark, tableDir(table).resolve(dirNameOf(p)))
+    val df = readVersionFrame(spark,
+      tableDir(table).resolve(dirNameOf(livePointer(table))))
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
@@ -545,12 +562,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         // version writes root files) — an O(buckets) listing, never
         // O(files); the restricted parse then touches ONLY slices
         // whose footer range intersects the requested buckets
-        val bucketLayout = listDir(vdir).exists(p =>
-          Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
         val use =
-          if (!bucketLayout) // root-file (empty) layout: kb is data
-            manifestRowsDirect(vdir).get
+          // root-file (empty) layout: kb is data
+          if (bucketDirs(vdir).isEmpty) manifestRowsDirect(vdir).get
           else manifestRowsSliced(vdir,
             Some(kbs.map(b => s"$BucketCol=$b/"))).get
         graft.sources.ManifestFileIndex.storeFrame(spark,
@@ -632,10 +646,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       version: Option[Long]): StoreScanSpec = {
     val dirName = version match {
       case Some(v) => versionDirNameOf(table, v)
-      case None =>
-        dirNameOf(currentPointer(table).getOrElse(
-          throw new IllegalStateException(
-            s"table $table has no committed version")))
+      case None => dirNameOf(livePointer(table))
     }
     val vdir = tableDir(table).resolve(dirName)
     def remap(e: Throwable): Nothing =
@@ -870,8 +881,10 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * CAS caveat: the expectation is the pointer AS OF THIS CALL. A
     * caller whose `df` was DERIVED from an earlier read of the table
     * must not use this path — a competitor landing between the read
-    * and this commit would be silently overwritten. Derive-then-
-    * replace flows go through [[readPinned]] + [[commitPinned]]. */
+    * and this commit would be silently overwritten, and neither may
+    * an exists()-guarded create. Derive-then-replace flows and
+    * creates go through [[readPinned]]/[[readPinnedOption]] +
+    * [[commitPinned]]. */
   def commit(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
     requireSnapshot(table, "commit")
     commitExpecting(spark, table, df, currentPointer(table))._1
@@ -888,43 +901,6 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       s"table $table is bucketed; $op would publish an unpartitioned " +
         "version and wedge later bucketed upserts — use upsertBucketed")
 
-  /** Create-commit: publish `df` as the FIRST version of `table`,
-    * with the CAS expectation pinned to ABSENCE. If a competitor
-    * created the table between the caller's `exists()` check and this
-    * publish, the commit raises [[ConcurrentCommitException]] (and
-    * the retry re-reads the winner and merges) instead of silently
-    * replacing the competitor's rows — the lost-update class
-    * [[readPinned]]/[[commitPinned]] close for the UPDATE path,
-    * applied to create. Every exists()-guarded create branch must use
-    * this, never [[commit]] (which re-reads the pointer at commit
-    * time and would CAS against the competitor's publish). */
-  def commitNew(spark: SparkSession, table: String, df: DataFrame): DataFrame =
-    commitNewVersioned(spark, table, df)._1
-
-  /** [[commitNew]] returning ALSO the version it published — for
-    * group commits, whose vector must name the versions THIS writer
-    * committed rather than re-read heads (a competitor's newer head
-    * woven into the vector is exactly the mixed state the marker
-    * exists to rule out). */
-  def commitNewVersioned(spark: SparkSession, table: String,
-      df: DataFrame): (DataFrame, Long) = {
-    requireSnapshot(table, "commitNew")
-    commitExpecting(spark, table, df, None)
-  }
-
-  /** The live snapshot plus the version NUMBER its pointer resolved —
-    * for cross-table consistency protocols: a table pair (A, B) where
-    * B's rows record the A-version they were derived from lets a
-    * consumer refuse a torn pair (read A, read B, check B's recorded
-    * version == A's resolved version) instead of silently answering
-    * from mixed snapshots. The stored BM25 index (postings + stats)
-    * is the shipped example. */
-  def readWithVersion(spark: SparkSession, table: String): (DataFrame, Long) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    (readDir(spark, table, dirNameOf(p)), versionOf(dirNameOf(p)))
-  }
-
   /** Read the live snapshot AND capture the pointer it came from, as
     * one token for [[commitPinned]]. This is the read half of the
     * read-derive-replace discipline: any rewrite computed from the
@@ -933,45 +909,40 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [[ConcurrentCommitException]] (→ [[withCommitRetries]] re-reads
     * and re-derives) instead of being silently overwritten. */
   def readPinned(spark: SparkSession, table: String): (DataFrame, CommitPin) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    (readDir(spark, table, dirNameOf(p)), CommitPin(table, Some(p)))
+    val (df, pin) = readPinnedOption(spark, table)
+    (df.getOrElse(throw new IllegalStateException(
+      s"table $table has no committed version")), pin)
   }
 
   /** [[readPinned]] tolerating an ABSENT table: the pin then captures
     * absence, so the later pinned publish fails if a competitor
-    * CREATES the table in between (the commitNew discipline for
-    * derive-then-replace flows whose first batch starts from
-    * nothing). */
+    * CREATES the table in between. This is the create discipline:
+    * every exists()-guarded create publishes through an absence pin,
+    * never [[commit]] (which re-reads the pointer at commit time and
+    * would CAS against — and silently replace — the competitor's
+    * publish). */
   def readPinnedOption(spark: SparkSession,
       table: String): (Option[DataFrame], CommitPin) = {
     val p = currentPointer(table)
-    (p.map(pp => readDir(spark, table, dirNameOf(pp))), CommitPin(table, p))
+    (p.map(pp => readDir(spark, table, dirNameOf(pp))),
+      CommitPin(table, p, p.map(pp => versionOf(dirNameOf(pp)))))
   }
 
   /** Commit `df` with the CAS expectation pinned to the pointer a
-    * prior [[readPinned]] captured — the publish fails (and the
-    * staged dir is dropped) if ANY commit landed since that read.
+    * prior [[readPinned]]/[[readPinnedOption]] captured — the publish
+    * fails (and the staged dir is dropped) if ANY commit landed since
+    * that read; an absence pin fails if anyone created the table.
     * The target table is the one the pin was read from (carrying it
     * in the pin makes a table mismatch unrepresentable rather than
-    * runtime-checked). */
+    * runtime-checked). Returns the re-read frame AND the version it
+    * published — group commits name the versions THIS writer
+    * committed, never re-read heads (a competitor's newer head woven
+    * into the vector is exactly the mixed state a marker rules out). */
   def commitPinned(spark: SparkSession, df: DataFrame,
-      pin: CommitPin): DataFrame =
-    commitPinnedVersioned(spark, df, pin)._1
-
-  /** [[commitPinned]] returning ALSO the version it published (see
-    * [[commitNewVersioned]] for why group commits need it). */
-  def commitPinnedVersioned(spark: SparkSession, df: DataFrame,
       pin: CommitPin): (DataFrame, Long) = {
     requireSnapshot(pin.table, "commitPinned")
     commitExpecting(spark, pin.table, df, pin.pointer)
   }
-
-  /** The version a [[CommitPin]] captured (None = pinned absence) —
-    * lets a no-op fold report the version its state corresponds to
-    * without re-reading the head. */
-  def pinVersion(pin: CommitPin): Option[Long] =
-    pin.pointer.map(p => versionOf(dirNameOf(p)))
 
   /** Commit `df` with the CAS expectation pinned to `expected` — the
     * pointer the CALLER's computation was based on. Every merge path
@@ -981,7 +952,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * overwritten (the lost-update the CAS exists to prevent). */
   private def commitExpecting(spark: SparkSession, table: String,
       df: DataFrame, expected: Option[String]): (DataFrame, Long) = {
-    val staged = writeVersion(spark, table, df, expected, partitioned = false)
+    val staged = writeVersion(spark, table, df, expected)
     publish(table, staged, expected)
     (readDir(spark, table, staged), versionOf(staged))
   }
@@ -1035,18 +1006,6 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
 
   private def zoneColsFile(table: String): Path =
     tableDir(table).resolve("_ZONECOLS")
-
-  /** Declare + snapshot-commit in one call — the publish shape
-    * [[Layout.zorderPublish]] uses (the artifact is created and
-    * mapped in the same breath). */
-  def commitZoneMapped(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String]): DataFrame = {
-    requireSnapshot(table, "commitZoneMapped")
-    val bound = declareZoneColumns(table, statsCols)
-    require(bound == statsCols,
-      s"table $table zone columns already declared as $bound")
-    commitExpecting(spark, table, df, currentPointer(table))._1
-  }
 
   private val ZoneMapDir = "_zonemap"
 
@@ -1135,11 +1094,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * `column` — at scale, a silently unpruned read IS the failure. */
   private def zonePrunedFiles(spark: SparkSession, table: String,
       column: String, lo: Any, hi: Any): (Path, Seq[(String, Long)], Int) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val vdir = tableDir(table).resolve(dirNameOf(p))
+    val vdir = tableDir(table).resolve(dirNameOf(livePointer(table)))
     val zmPath = vdir.resolve(ZoneMapDir)
-    // the compactBuckets discipline: _CURRENT can transiently name a
+    // the autoMaintain discipline: _CURRENT can transiently name a
     // gc-swept dir (a competitor's publish mid-undo) or retention can
     // prune the version under us — both are retryable conflicts for
     // withCommitRetries, never a raw I/O error
@@ -1162,8 +1119,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       if (!Files.exists(vdir))
         retryable(throw new java.nio.file.NoSuchFileException(vdir.toString))
       throw new IllegalStateException(
-        s"table $table's live version carries no zone map — publish " +
-          "it with commitZoneMapped (or Layout.zorderPublish)")
+        s"table $table's live version carries no zone map — declare " +
+          "its zone columns before the commit (or Layout.zorderPublish)")
     }
     val zm = retryable(spark.read.parquet(zmPath.toString))
     require(zm.columns.contains(s"min_$column"),
@@ -1202,11 +1159,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         case None =>
           val kept = keptNames.collect().map(_.getString(0)).sorted
             .map(f => (f, Files.size(vdir.resolve(f)))).toSeq
-          val entries = listDir(vdir)
-          val total = entries.count(isDataFile) + entries
-            .filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith(s"$BucketCol="))
-            .map(d => listDir(d).count(isDataFile)).sum
+          val total = listDir(vdir).count(isDataFile) +
+            bucketDirs(vdir).map(d => listDir(d).count(isDataFile)).sum
           (vdir, kept, total)
       }
     }
@@ -1216,8 +1170,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * [min, max] for `column` intersects [lo, hi], then re-apply the
     * predicate (pruning is an optimization, correctness comes from
     * the residual filter — gate u12 pins pruned ≡ full-scan filter).
-    * Requires a [[commitZoneMapped]]-published version covering
-    * `column`. */
+    * Requires a version committed after [[declareZoneColumns]]
+    * covered `column`. */
   def readZonePruned(spark: SparkSession, table: String, column: String,
       lo: Any, hi: Any): DataFrame = {
     val (vdir, files, _) = zonePrunedFiles(spark, table, column, lo, hi)
@@ -1357,12 +1311,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       case Some(bs) => bs.toSeq.sorted.flatMap(b =>
         rowsIn(dir.resolve(s"$BucketCol=$b"), s"$BucketCol=$b/"))
       case None =>
-        val entries = listDir(dir)
-        entries.filter(isDataFile)
+        listDir(dir).filter(isDataFile)
           .map(f => (f.getFileName.toString, Files.size(f))) ++
-          entries.filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
-            .sortBy(_.getFileName.toString)
+          bucketDirs(dir).sortBy(_.getFileName.toString)
             .flatMap(d => rowsIn(d, d.getFileName.toString + "/"))
     }
   }
@@ -1404,19 +1355,14 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   /** The live version's file manifest (file, bytes) — None for
     * versions from before manifests existed. Rows stay distributed;
     * aggregate, don't collect. */
-  def fileManifest(spark: SparkSession, table: String): Option[DataFrame] = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    manifestAt(spark, tableDir(table).resolve(dirNameOf(p)))
-  }
+  def fileManifest(spark: SparkSession, table: String): Option[DataFrame] =
+    manifestAt(spark, tableDir(table).resolve(dirNameOf(livePointer(table))))
 
   /** (file count, total bytes) of the live version from the manifest
     * — one sidecar read, O(1) driver rows; falls back to a directory
     * walk for pre-manifest versions. */
   def fileStats(spark: SparkSession, table: String): (Long, Long) = {
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val vdir = tableDir(table).resolve(dirNameOf(p))
+    val vdir = tableDir(table).resolve(dirNameOf(livePointer(table)))
     // driver-side sidecar parse (cached) — no job round for two longs
     manifestRowsDirect(vdir) match {
       case Some(rows) => (rows.size.toLong, rows.map(_._2).sum)
@@ -1508,8 +1454,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         case Some(Nil) => full.where(lit(false))
         case Some(kbs) => storedSchemaOf(dir) match {
           case Some(schema) if schema.fieldNames.contains(BucketCol) =>
-            readBucketRestricted(spark, dir, kbs.toSet)
-              .filter(col(BucketCol).isin(kbs: _*)).drop(BucketCol)
+            storedBuckets(spark, table, name, kbs.toSet)
           case _ => full
         }
       }
@@ -1557,19 +1502,13 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   /** LWW-upsert into a key-bucketed table, rewriting only the buckets
     * the delta touches; untouched buckets are hard-linked from the
     * previous version (byte-identical, O(1) per file). `numBuckets`
-    * binds at table creation and is ignored afterwards. */
+    * binds at table creation and is ignored afterwards. The CAS
+    * expects the pointer as of this call; a delta DERIVED from a read
+    * of the table publishes through [[upsertBucketedPinned]]. Returns
+    * the re-read frame AND the version it published (empty delta: the
+    * version the no-op was based on), as [[upsertBucketedPinned]]. */
   def upsertBucketed(spark: SparkSession, table: String, incoming: DataFrame,
-      keys: Seq[String], numBuckets: Int = 32): DataFrame =
-    upsertBucketedVersioned(spark, table, incoming, keys, numBuckets)._1
-
-  /** [[upsertBucketed]] returning ALSO the version it published (for
-    * an empty delta: the version the no-op was based on) — the group-
-    * commit discipline ([[commitGroup]] wants the versions THIS
-    * writer committed, never re-read heads; see
-    * [[commitNewVersioned]]). */
-  def upsertBucketedVersioned(spark: SparkSession, table: String,
-      incoming: DataFrame, keys: Seq[String],
-      numBuckets: Int = 32): (DataFrame, Long) =
+      keys: Seq[String], numBuckets: Int = 32): (DataFrame, Long) =
     upsertBucketedExpecting(spark, table, incoming, keys, numBuckets,
       currentPointer(table))
 
@@ -1581,14 +1520,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * (re-read + re-derive via [[withCommitRetries]]) rather than be
     * LWW-merged-over with rows derived from the stale snapshot. The
     * merge reads the PIN's version; an absence pin takes the create
-    * path (CAS to absence — a racing creator loses cleanly). */
+    * path (CAS to absence — a racing creator loses cleanly). Returns
+    * ALSO the version it published — for an empty delta, the version
+    * the no-op was based on (the [[commitPinned]] group-commit
+    * discipline). */
   def upsertBucketedPinned(spark: SparkSession, incoming: DataFrame,
-      keys: Seq[String], pin: CommitPin, numBuckets: Int = 32): DataFrame =
-    upsertBucketedPinnedVersioned(spark, incoming, keys, pin, numBuckets)._1
-
-  /** [[upsertBucketedPinned]] returning ALSO the version it published
-    * (see [[commitNewVersioned]]). */
-  def upsertBucketedPinnedVersioned(spark: SparkSession, incoming: DataFrame,
       keys: Seq[String], pin: CommitPin,
       numBuckets: Int = 32): (DataFrame, Long) =
     upsertBucketedExpecting(spark, pin.table, incoming, keys, numBuckets,
@@ -1598,53 +1534,33 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       incoming: DataFrame, keys: Seq[String], numBuckets: Int,
       prev: Option[String]): (DataFrame, Long) = {
     require(numBuckets >= 1)
-    def bucketed(df: DataFrame, n: Int): DataFrame =
-      df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
-    if (prev.isEmpty)
-      createBucketed(spark, table, incoming, keys, numBuckets, Nil)
-    else {
-      val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
-        s"table $table was created as a snapshot table; use upsert"))
-      val curDir = tableDir(table).resolve(dirNameOf(prev.get))
-      // which buckets does the delta touch? (≤ n ints — driver-safe)
-      val inc = bucketed(incoming, n)
-      val touched = guardedAction(s"upsert touched-set of $table") {
-        inc.select(BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSet
-      }
-      // empty delta → version no-op (free — the touched set already
-      // told us): onto an EMPTY table, the merged partitionBy write
-      // would otherwise produce a fileless version and wedge every
-      // later read in schema inference. The reported version is the
-      // base the no-op checked against, never a re-read head.
-      if (touched.isEmpty)
-        return (read(spark, table), versionOf(dirNameOf(prev.get)))
-      // manifest-planned read of just the touched buckets — under
-      // the version's CANONICAL schema: an inferred one could drop a
-      // previously-evolved column and the merge would lose its values
-      val storedTouched = readBucketRestricted(spark, curDir, touched)
-        .filter(col(BucketCol).isin(touched.toSeq: _*))
-      val (stored, incA) = SchemaEvolution.align(
-        storedTouched.drop(BucketCol), incoming)
-      val merged = bucketed(
-        Upserts.upsertLastWriteWins(stored, incA, keys), n)
-      val staged = stagedDirName(versionOf(dirNameOf(prev.get)) + 1)
-      val nextDir = tableDir(table).resolve(tmpName(staged))
-      guardedAction(s"upsert merge of $table") {
-        merged.write.mode("errorifexists")
-          .partitionBy(BucketCol).parquet(nextDir.toString)
-      }
-      writeSchemaFile(nextDir, merged.schema)
-      shareUntouchedBuckets(curDir, nextDir, touched)
-      // O(delta) map maintenance: the touched buckets' fresh files
-      // re-scan (a partition-pruned read — untouched dirs hold only
-      // links, touched dirs only fresh files), everything else
-      // carries from the previous version's map
-      maintainZoneMapBucketed(spark, table, nextDir, prev, Some(touched))
-      maintainManifestBucketed(spark, table, nextDir, prev, Some(touched))
-      finalizeStaged(table, staged)
-      publish(table, staged, prev)
-      (readDir(spark, table, staged), versionOf(staged))
+    prev match {
+      case None => createBucketed(spark, table, incoming, keys, numBuckets, Nil)
+      case Some(p) =>
+        val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
+          s"table $table was created as a snapshot table; use upsert"))
+        // which buckets does the delta touch? (≤ n ints — driver-safe)
+        val touched = guardedAction(s"upsert touched-set of $table") {
+          incoming.select(bucketOf(keys, n)).distinct()
+            .collect().map(_.getInt(0)).toSet
+        }
+        // empty delta → version no-op (free — the touched set already
+        // told us): onto an EMPTY table, the merged partitionBy write
+        // would otherwise produce a fileless version and wedge every
+        // later read in schema inference. The reported version is the
+        // base the no-op checked against, never a re-read head.
+        if (touched.isEmpty) (read(spark, table), versionOf(dirNameOf(p)))
+        else {
+          // the touched buckets under the version's CANONICAL schema:
+          // an inferred one could drop a previously-evolved column and
+          // the merge would lose its values. The merge is written as
+          // it comes out of the LWW plan — no extra exchange.
+          val (stored, incA) = SchemaEvolution.align(
+            storedBuckets(spark, table, p, touched), incoming)
+          rewriteBuckets(spark, table, p, touched,
+            Upserts.upsertLastWriteWins(stored, incA, keys)
+              .withColumn(BucketCol, bucketOf(keys, n)), Map.empty)
+        }
     }
   }
 
@@ -1665,23 +1581,17 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * refuses loudly rather than serving an unmapped scan. */
   def deleteBucketed(spark: SparkSession, table: String,
       removals: DataFrame, keys: Seq[String]): DataFrame = {
-    val n = numBuckets(table).getOrElse(throw new IllegalStateException(
-      s"table $table is not bucketed — snapshot tables delete via " +
-        "upsert/commit of the filtered frame"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
+    val (n, prev) = bucketedHead(table,
+      "snapshot tables delete via upsert/commit of the filtered frame")
     val rem = removals.select(keys.map(col): _*).distinct()
     val touched = guardedAction(s"delete touched-set of $table") {
-      rem.select(pmod(hash(keys.map(col): _*), lit(n)).as("kb"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      rem.select(bucketOf(keys, n)).distinct()
+        .collect().map(_.getInt(0)).toSet
     }
-    if (touched.isEmpty) return read(spark, table)
-    val kept = readBucketRestricted(spark, curDir, touched)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .drop(BucketCol)
-      .join(rem, keys, "left_anti")
-    publishTouchedRewrite(spark, table, kept, keys, n, touched, prev)
+    if (touched.isEmpty) read(spark, table)
+    else rewriteBuckets(spark, table, prev, touched, layoutBuckets(
+      storedBuckets(spark, table, prev, touched).join(rem, keys, "left_anti"),
+      n, keys, Nil), Map.empty)._1
   }
 
   /** PREDICATE DELETE (`DELETE FROM t WHERE p` — the SQL face's
@@ -1710,34 +1620,27 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         val any = guardedAction(s"deleteWhere probe of $table")(
           cur.filter(victim).limit(1).count())
         if (any == 0L) cur
-        else commitPinned(spark, cur.filter(!victim), pin)
+        else commitPinned(spark, cur.filter(!victim), pin)._1
       case Some(n) =>
         val keys = keyColumns(table).getOrElse(
           throw new IllegalStateException(
             s"table $table has no _KEYS stamp — predicate delete " +
               "re-routes kept rows by key; re-stamp via one " +
               "replaceBucketed"))
-        val prev = currentPointer(table).getOrElse(
-          throw new IllegalStateException(
-            s"table $table has no committed version"))
-        val curDir = tableDir(table).resolve(dirNameOf(prev))
+        val prev = livePointer(table)
         // victims' buckets from ONE zone-skipped scan (≤ n ints):
         // the predicate pushes into the manifest-planned read, so a
         // zone-mapped delete key prices at its file cut, not a full
         // pass
         val touched = guardedAction(s"deleteWhere touched-set of $table") {
           readDir(spark, table, dirNameOf(prev)).filter(victim)
-            .select(pmod(hash(keys.map(col): _*), lit(n)).as("kb"))
-            .distinct().collect().map(_.getInt(0)).toSet
+            .select(bucketOf(keys, n)).distinct()
+            .collect().map(_.getInt(0)).toSet
         }
         if (touched.isEmpty) read(spark, table)
-        else {
-          val kept = readBucketRestricted(spark, curDir, touched)
-            .filter(col(BucketCol).isin(touched.toSeq: _*))
-            .drop(BucketCol)
-            .filter(!victim)
-          publishTouchedRewrite(spark, table, kept, keys, n, touched, prev)
-        }
+        else rewriteBuckets(spark, table, prev, touched, layoutBuckets(
+          storedBuckets(spark, table, prev, touched).filter(!victim),
+          n, keys, Nil), Map.empty)._1
     }
   }
 
@@ -1791,18 +1694,12 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
         .flatMap(r => Option(r.getString(0))).toSeq)
       return createBucketed(spark, table, upserts, keys, numBuckets, Nil)._1
     }
-    val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
-      s"table $table was created as a snapshot table; apply feeds to " +
-        "bucketed tables"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
+    val (n, prev) = bucketedHead(table, "apply feeds to bucketed tables")
     // one aggregation derives BOTH the touched buckets and the label
     // audit (upsert and delete keys hash identically — every change
     // row marks its bucket)
     val probe = guardedAction(s"change-feed probe of $table") {
-      changes
-        .groupBy(pmod(hash(keys.map(col): _*), lit(n)).as("kb"))
+      changes.groupBy(bucketOf(keys, n).as("kb"))
         .agg(max(labelAudit).as("bad")).collect()
     }
     requireLabels(probe.flatMap(r => Option(r.getString(1))).toSeq)
@@ -1810,50 +1707,66 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       .select(keys.map(col): _*).distinct()
     val touched = probe.map(_.getInt(0)).toSet
     if (touched.isEmpty) return read(spark, table)
-    val storedTouched = readBucketRestricted(spark, curDir, touched)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .drop(BucketCol)
-    val (stored, incA) = SchemaEvolution.align(storedTouched, upserts)
+    val (stored, incA) = SchemaEvolution.align(
+      storedBuckets(spark, table, prev, touched), upserts)
     val merged = Upserts.upsertLastWriteWins(
       stored.join(delKeys, keys, "left_anti"), incA, keys)
-    publishTouchedRewrite(spark, table, merged, keys, n, touched, prev)
+    rewriteBuckets(spark, table, prev, touched,
+      layoutBuckets(merged, n, keys, Nil), Map.empty)._1
   }
 
-  /** Shared publish tail for touched-bucket REWRITES whose result can
-    * be empty ([[deleteBucketed]], [[applyChangesBucketed]]): lay out
-    * `rows`, write the touched partitions, link the rest, maintain
-    * zone map + manifest O(delta) — or, when every row is gone
-    * (fileless version), record the empty manifest and drop the zone
-    * map so a later [[readZonePruned]] refuses loudly rather than
-    * serving an unmapped scan. One CAS publish against `prev`. */
-  private def publishTouchedRewrite(spark: SparkSession, table: String,
-      rows: DataFrame, keys: Seq[String], n: Int, touched: Set[Int],
-      prev: String): DataFrame = {
-    val laid = rows
-      .withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
-      .repartition(col(BucketCol))
+  /** The bucket id of a row: `pmod(hash(keys), n)`. */
+  private def bucketOf(keys: Seq[String], n: Int): Column =
+    pmod(hash(keys.map(col): _*), lit(n))
+
+  /** Bucket count and live pointer of a bucketed table — the head
+    * every touched-bucket operation starts from; `why` completes the
+    * refusal for snapshot tables. */
+  private def bucketedHead(table: String, why: String): (Int, String) = {
+    val n = numBuckets(table).getOrElse(throw new IllegalStateException(
+      s"table $table is not bucketed — $why"))
+    (n, livePointer(table))
+  }
+
+  /** The stored rows of buckets `kbs` at the version `pointer` names,
+    * bucket column dropped — manifest-planned, so only those buckets'
+    * files enter the plan ([[readBucketRestricted]]). */
+  private def storedBuckets(spark: SparkSession, table: String,
+      pointer: String, kbs: Set[Int]): DataFrame =
+    readBucketRestricted(spark, tableDir(table).resolve(dirNameOf(pointer)), kbs)
+      .filter(col(BucketCol).isin(kbs.toSeq: _*)).drop(BucketCol)
+
+  /** THE touched-bucket rewrite every O(delta) bucketed operation
+    * publishes through: write `laid` (the new rows of exactly the
+    * `touched` buckets, bucket column set, in the caller's physical
+    * layout; `writeOptions` go to the parquet writer), hard-link
+    * every other bucket from `prev`, maintain zone map + manifest
+    * O(delta) — or, when no row is left anywhere (fileless version),
+    * record the empty manifest and drop the zone map so a later
+    * [[readZonePruned]] refuses loudly rather than serving an
+    * unmapped scan. One CAS publish against `prev`; returns the
+    * re-read frame and the version published. */
+  private def rewriteBuckets(spark: SparkSession, table: String,
+      prev: String, touched: Set[Int], laid: DataFrame,
+      writeOptions: Map[String, String]): (DataFrame, Long) = {
     val staged = stagedDirName(versionOf(dirNameOf(prev)) + 1)
     val nextDir = tableDir(table).resolve(tmpName(staged))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
     guardedAction(s"touched-bucket rewrite of $table") {
-      laid.write.mode("errorifexists")
+      laid.write.mode("errorifexists").options(writeOptions)
         .partitionBy(BucketCol).parquet(nextDir.toString)
     }
     writeSchemaFile(nextDir, laid.schema)
-    shareUntouchedBuckets(curDir, nextDir, touched)
-    val anyFiles = listDir(nextDir).exists(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"$BucketCol="))
-    if (anyFiles) {
+    shareUntouchedBuckets(tableDir(table).resolve(dirNameOf(prev)), nextDir,
+      touched)
+    if (bucketDirs(nextDir).nonEmpty) {
       maintainZoneMapBucketed(spark, table, nextDir, Some(prev),
         Some(touched))
       maintainManifestBucketed(spark, table, nextDir, Some(prev),
         Some(touched))
-    } else {
-      writeManifestRowsDriver(nextDir, Seq.empty)
-    }
+    } else writeManifestRowsDriver(nextDir, Seq.empty)
     finalizeStaged(table, staged)
     publish(table, staged, Some(prev))
-    readDir(spark, table, staged)
+    (readDir(spark, table, staged), versionOf(staged))
   }
 
   /** Deterministic write layout for a bucketed version: rows routed
@@ -1862,8 +1775,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * probes (the inverted-index discipline). */
   private def layoutBuckets(df: DataFrame, n: Int, keys: Seq[String],
       sortWithin: Seq[String]): DataFrame = {
-    val b = df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(n)))
-    val rep = b.repartition(col(BucketCol))
+    val rep = df.withColumn(BucketCol, bucketOf(keys, n))
+      .repartition(col(BucketCol))
     if (sortWithin.isEmpty) rep
     else rep.sortWithinPartitions((BucketCol +: sortWithin).map(col): _*)
   }
@@ -1904,9 +1817,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       df.write.mode("errorifexists").partitionBy(BucketCol)
         .parquet(dir.toString)
     }
-    val hasData = listDir(dir).exists(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"$BucketCol="))
-    if (!hasData) {
+    if (bucketDirs(dir).isEmpty) {
       deleteRecursively(dir)
       df.write.mode("errorifexists").parquet(dir.toString)
     }
@@ -1932,6 +1843,22 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     (readDir(spark, table, staged), versionOf(staged))
   }
 
+  /** Nullability markers erased recursively — parquet bytes cannot
+    * distinguish them, so schema EQUALITY contracts compare this form
+    * (the public twin of Spark's `private[spark]` `asNullable`). */
+  private def relaxNulls(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = dt match {
+    case org.apache.spark.sql.types.ArrayType(et, _) =>
+      org.apache.spark.sql.types.ArrayType(relaxNulls(et), containsNull = true)
+    case org.apache.spark.sql.types.MapType(k, v, _) =>
+      org.apache.spark.sql.types.MapType(relaxNulls(k), relaxNulls(v),
+        valueContainsNull = true)
+    case st: org.apache.spark.sql.types.StructType =>
+      org.apache.spark.sql.types.StructType(st.fields.map(f =>
+        f.copy(dataType = relaxNulls(f.dataType), nullable = true)))
+    case other => other
+  }
+
   /** INSERT-ONLY O(delta) append into a key-bucketed table: the
     * delta's rows are written as NEW part-files inside their bucket
     * dirs and EVERY existing file is hard-linked into the next
@@ -1949,28 +1876,16 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * (at-least-once producers dedup upstream or use upsertBucketed).
     * The incoming schema must equal the stored schema exactly (no
     * evolution on this path — an evolving append would mix file
-    * schemas inside one version; evolve via upsertBucketed). File
-    * counts grow by up to `numBuckets` per append;
+    * schemas inside one version; evolve via upsertBucketed). An
+    * EMPTY delta is schema-validated like any other BEFORE it is
+    * treated as a no-op: a drifted empty delta refuses (no version,
+    * no staging left behind) rather than passing silently, and a
+    * matching one publishes nothing and returns the live snapshot.
+    * File counts grow by up to `numBuckets` per append;
     * [[compactBuckets]] re-bounds them periodically. `sortWithin`
     * orders rows inside each new file (row-group stat quality for
     * [[readBucketsOf]]-style probes). Publishes through the same CAS
     * pointer swap as every commit; creates the table if absent. */
-  /** Nullability markers erased recursively — parquet bytes cannot
-    * distinguish them, so schema EQUALITY contracts compare this form
-    * (the public twin of Spark's `private[spark]` `asNullable`). */
-  private def relaxNulls(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = dt match {
-    case org.apache.spark.sql.types.ArrayType(et, _) =>
-      org.apache.spark.sql.types.ArrayType(relaxNulls(et), containsNull = true)
-    case org.apache.spark.sql.types.MapType(k, v, _) =>
-      org.apache.spark.sql.types.MapType(relaxNulls(k), relaxNulls(v),
-        valueContainsNull = true)
-    case st: org.apache.spark.sql.types.StructType =>
-      org.apache.spark.sql.types.StructType(st.fields.map(f =>
-        f.copy(dataType = relaxNulls(f.dataType), nullable = true)))
-    case other => other
-  }
-
   def appendBucketed(spark: SparkSession, table: String, incoming: DataFrame,
       keys: Seq[String], numBuckets: Int = 32,
       sortWithin: Seq[String] = Nil): DataFrame = {
@@ -1978,11 +1893,10 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     if (!exists(table))
       createBucketed(spark, table, incoming, keys, numBuckets, sortWithin)._1
     else {
-      val n = this.numBuckets(table).getOrElse(throw new IllegalStateException(
-        s"table $table was created as a snapshot table; appends need " +
-          "bucket partitions — adopt it via replaceBucketed first"))
-      val prev = currentPointer(table)
-      val curDir = tableDir(table).resolve(dirNameOf(prev.get))
+      val (n, p) = bucketedHead(table, "appends need bucket partitions; " +
+        "adopt it via replaceBucketed first")
+      val prev = Some(p)
+      val curDir = tableDir(table).resolve(dirNameOf(p))
       val storedSchema = readVersionFrame(spark, curDir)
         .drop(BucketCol).schema
       // compare nullability-relaxed forms: a file read forces
@@ -1999,7 +1913,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
           s"must equal stored ${storedSchema.simpleString} — " +
           "schema evolution goes through upsertBucketed")
       val aligned = incoming.select(storedSchema.fieldNames.map(col): _*)
-      val staged = stagedDirName(versionOf(dirNameOf(prev.get)) + 1)
+      val staged = stagedDirName(versionOf(dirNameOf(p)) + 1)
       val nextDir = tableDir(table).resolve(tmpName(staged))
       val laid = layoutBuckets(aligned, n, keys, sortWithin)
       laid.write.mode("errorifexists")
@@ -2012,9 +1926,7 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       // probe scheduled a full job round evaluating the delta plan
       // once more PER APPEND (the writeBucketedVersion rationale,
       // guide §1.2 — remove work that isn't the algorithm).
-      val hasData = listDir(nextDir).exists(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith(s"$BucketCol="))
-      if (!hasData) {
+      if (bucketDirs(nextDir).isEmpty) {
         deleteRecursively(nextDir)
         return read(spark, table)
       }
@@ -2095,17 +2007,12 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * table is written with; its rows are the lookup keys (small — the
     * distinct bucket ids are collected to build the partition
     * filter). Returns the pruned frame plus the resolved version
-    * (cross-table consistency, see [[readWithVersion]]). */
+    * (cross-table consistency, see [[readVersioned]]). */
   def readBucketsOf(spark: SparkSession, table: String,
       keyValues: DataFrame): (DataFrame, Long) = {
-    val n = numBuckets(table).getOrElse(throw new IllegalStateException(
-      s"table $table is not bucketed — readBucketsOf needs bucket partitions"))
-    val p = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val kbs = keyValues
-      .select(pmod(hash(keyValues.columns.map(col): _*), lit(n)).as("kb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val vdir = tableDir(table).resolve(dirNameOf(p))
+    val (n, p) = bucketedHead(table, "readBucketsOf needs bucket partitions")
+    val kbs = keyValues.select(bucketOf(keyValues.columns.toSeq, n))
+      .distinct().collect().map(_.getInt(0)).toSet
     // O(TOUCHED) METADATA, not O(table): a whole-version scan
     // filtered on the partition column still LISTS every file at
     // plan time (partition pruning happens after discovery) — at
@@ -2115,18 +2022,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     // versions hand Spark exactly the touched bucket DIRS, and
     // pre-schema versions fall back to the full scan
     // ([[readBucketRestricted]]).
-    (readBucketRestricted(spark, vdir, kbs.toSet)
-      .filter(col(BucketCol).isin(kbs: _*)).drop(BucketCol),
-      versionOf(dirNameOf(p)))
+    (storedBuckets(spark, table, p, kbs), versionOf(dirNameOf(p)))
   }
 
-  /** Share untouched bucket dirs from the previous version without
-    * rewriting them (hard links on POSIX, copies on object stores).
-    * If the base version vanishes mid-link, competitors advanced
-    * past the retention window — surface it as the retryable
-    * conflict it is, not a raw I/O error. (Deployments should size
-    * keepVersions comfortably above the concurrent-writer count so
-    * a merger's base version normally survives its operation.) */
   /** Directory listing with the stream CLOSED — Files.list holds an
     * open directory FD until closed, and a long-running streaming
     * driver pruning 3-4 tables per micro-batch would otherwise leak
@@ -2136,14 +2034,26 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     try s.iterator().asScala.toList finally s.close()
   }
 
+  /** The `__kb=N` bucket dirs directly under a version dir. */
+  private def bucketDirs(dir: Path): Seq[Path] =
+    listDir(dir).filter(p => Files.isDirectory(p) &&
+      p.getFileName.toString.startsWith(s"$BucketCol="))
+
+  private def bucketIdOf(bucketDir: Path): Int =
+    bucketDir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
+
+  /** Share untouched bucket dirs from the previous version without
+    * rewriting them (hard links on POSIX, copies on object stores).
+    * If the base version vanishes mid-link, competitors advanced
+    * past the retention window — surface it as the retryable
+    * conflict it is, not a raw I/O error. (Deployments should size
+    * keepVersions comfortably above the concurrent-writer count so
+    * a merger's base version normally survives its operation.) */
   private def shareUntouchedBuckets(curDir: Path, nextDir: Path,
       touched: Set[Int]): Unit = {
     try {
-      listDir(curDir)
-        .filter(p => Files.isDirectory(p))
-        .filter(p => p.getFileName.toString.startsWith(s"$BucketCol="))
-        .filterNot(p => touched.contains(
-          p.getFileName.toString.stripPrefix(s"$BucketCol=").toInt))
+      bucketDirs(curDir)
+        .filterNot(p => touched.contains(bucketIdOf(p)))
         .foreach { src =>
           val dst = nextDir.resolve(src.getFileName.toString)
           Files.createDirectories(dst)
@@ -2171,6 +2081,8 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * hash-routed to a single task, so `partitionBy` emits exactly
     * one part per bucket), shares all other buckets untouched, and
     * publishes through the same CAS pointer swap as any commit.
+    * This is [[autoMaintain]]'s count tier alone (a zero
+    * `minBytesPerFile` never elects a bucket by size).
     *
     * Concurrency: a compaction is a semantic no-op, so losing the
     * pointer race to a concurrent upsert is always safe — the CAS
@@ -2184,113 +2096,9 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
   def compactBuckets(spark: SparkSession, table: String,
       maxFilesPerBucket: Int = 4,
       clusterBy: Option[String] = None,
-      clusterRowsPerFile: Long = 1L << 20): Set[Int] = {
-    require(maxFilesPerBucket >= 1)
-    numBuckets(table).getOrElse(throw new IllegalStateException(
-      s"table $table is not bucketed; snapshot tables rewrite whole on commit"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
-    // bucket -> parquet part-file count; a driver-side listing of
-    // ≤ numBuckets dirs (same scale contract as the touched-set).
-    // The listed dir can VANISH under us in exactly one legitimate
-    // window: a competitor's publish was gc-swept and its undo has
-    // not landed yet (_CURRENT transiently names a deleted dir) —
-    // surface that as the retryable conflict it is (the
-    // shareUntouchedBuckets discipline), never a raw I/O error.
-    val counts: Map[Int, Int] =
-      try manifestRowsDirect(curDir) match {
-        // manifest era: one driver-side sidecar parse, grouped in
-        // Scala — never a 10⁵-entry directory walk (nor, since this
-        // round, a Spark job round) per maintenance
-        case Some(rows) =>
-          rows.flatMap(r => relBucketOf(r._1))
-            .groupBy(identity).map { case (b, bs) => b -> bs.size }
-        case None => listDir(curDir)
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
-          .map { p =>
-            val b = p.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
-            b -> listDir(p).count(isDataFile)
-          }.toMap
-      } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during compaction — a " +
-              "competitor's swept publish is mid-undo; re-read and retry")
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("does not exist") =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during compaction — a " +
-              "competitor's swept publish is mid-undo; re-read and retry")
-      }
-    val rewrite = counts.filter(_._2 > maxFilesPerBucket).keySet
-    compactBucketSet(spark, table, rewrite, prev, clusterBy,
+      clusterRowsPerFile: Long = 1L << 20): Set[Int] =
+    autoMaintain(spark, table, maxFilesPerBucket, 0L, clusterBy,
       clusterRowsPerFile)
-  }
-
-  /** Rewrite exactly `rewrite`'s buckets of the version pinned by
-    * `prev` — the shared compaction tail of [[compactBuckets]]
-    * (count trigger) and [[autoMaintain]] (size-tiered policy).
-    * Empty set ⇒ no version published.
-    *
-    * ZONE CLUSTERING (the Delta OPTIMIZE ZORDER shape, single
-    * column): plain compaction rewrites debt buckets AS-IS, so an
-    * organically-grown table's per-file min/max ranges on the zone
-    * column overlap and [[graft.sources.ManifestFileIndex]]'s data
-    * skipping keeps everything. With `clusterBy = Some(c)` the
-    * rewrite SORTS each bucket by `c` and splits it into
-    * `clusterRowsPerFile`-row files — sequential slices of a sorted
-    * stream, so every file covers a TIGHT disjoint `c`-range and a
-    * range predicate over the zone map (and parquet's own row-group
-    * stats) cuts to the few files that matter. `c` must already be a
-    * declared zone column (the map is maintained in the same version
-    * publish — there is nothing to cluster FOR otherwise). Answers
-    * are invariant (ZoneMapSpec pins shuffled ≡ clustered); size
-    * `clusterRowsPerFile` so a bucket splits into ≤ the maintenance
-    * policy's `maxFilesPerBucket` files, or the count tier re-elects
-    * the bucket every pass (idempotent rewrites — cost, not drift). */
-  private def compactBucketSet(spark: SparkSession, table: String,
-      rewrite: Set[Int], prev: String,
-      clusterBy: Option[String] = None,
-      clusterRowsPerFile: Long = 1L << 20): Set[Int] = {
-    val curDir = tableDir(table).resolve(dirNameOf(prev))
-    clusterBy.foreach { c =>
-      require(clusterRowsPerFile >= 1)
-      require(zoneColumns(table).exists(_.contains(c)),
-        s"compact clusterBy=$c: not a declared zone column of $table " +
-          s"(declared: ${zoneColumns(table).getOrElse(Seq.empty)}) — " +
-          "clustering exists to tighten the zone map's per-file ranges")
-    }
-    if (rewrite.isEmpty) Set.empty
-    else {
-      val base = readBucketRestricted(spark, curDir, rewrite)
-        .filter(col(BucketCol).isin(rewrite.toSeq: _*))
-        .repartition(rewrite.size, col(BucketCol))
-      val fragmented = clusterBy match {
-        case Some(c) => base.sortWithinPartitions(col(BucketCol), col(c))
-        case None => base
-      }
-      val staged = stagedDirName(versionOf(dirNameOf(prev)) + 1)
-      val nextDir = tableDir(table).resolve(tmpName(staged))
-      val writer = fragmented.write.mode("errorifexists")
-      clusterBy.foreach(_ =>
-        writer.option("maxRecordsPerFile", clusterRowsPerFile))
-      writer.partitionBy(BucketCol).parquet(nextDir.toString)
-      writeSchemaFile(nextDir, fragmented.schema)
-      shareUntouchedBuckets(curDir, nextDir, rewrite)
-      // compaction rewrites whole buckets: same zone-map shape as the
-      // merge path (rewritten buckets re-scan, the rest carries)
-      maintainZoneMapBucketed(spark, table, nextDir, Some(prev),
-        Some(rewrite))
-      maintainManifestBucketed(spark, table, nextDir, Some(prev),
-        Some(rewrite))
-      finalizeStaged(table, staged)
-      publish(table, staged, Some(prev))
-      rewrite
-    }
-  }
 
   /** AUTO-MAINTENANCE: the POLICY end of compaction — at 100 TB the
     * small-file debt of streaming loops needs triggers, not an
@@ -2309,23 +2117,45 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
     * no-op, loser-safe under [[withCommitRetries]]. No debt ⇒ NO
     * version churn (the u10 maintenance discipline). Returns the
     * rewritten buckets; gate u16 pins auto ≡ manual through an
-    * ingest run, ParquetTableStoreSpec pins trigger selection. */
+    * ingest run, ParquetTableStoreSpec pins trigger selection.
+    *
+    * ZONE CLUSTERING (the Delta OPTIMIZE ZORDER shape, single
+    * column): plain compaction rewrites debt buckets AS-IS, so an
+    * organically-grown table's per-file min/max ranges on the zone
+    * column overlap and [[graft.sources.ManifestFileIndex]]'s data
+    * skipping keeps everything. With `clusterBy = Some(c)` the
+    * rewrite SORTS each bucket by `c` and splits it into
+    * `clusterRowsPerFile`-row files — sequential slices of a sorted
+    * stream, so every file covers a TIGHT disjoint `c`-range and a
+    * range predicate over the zone map (and parquet's own row-group
+    * stats) cuts to the few files that matter. `c` must already be a
+    * declared zone column (the map is maintained in the same version
+    * publish — there is nothing to cluster FOR otherwise). Answers
+    * are invariant (ZoneMapSpec pins shuffled ≡ clustered); size
+    * `clusterRowsPerFile` so a bucket splits into ≤ the maintenance
+    * policy's `maxFilesPerBucket` files, or the count tier re-elects
+    * the bucket every pass (idempotent rewrites — cost, not drift). */
   def autoMaintain(spark: SparkSession, table: String,
       maxFilesPerBucket: Int = 4,
       minBytesPerFile: Long = 8L << 20,
       clusterBy: Option[String] = None,
       clusterRowsPerFile: Long = 1L << 20): Set[Int] = {
     require(maxFilesPerBucket >= 1 && minBytesPerFile >= 0)
-    numBuckets(table).getOrElse(throw new IllegalStateException(
-      s"table $table is not bucketed; snapshot tables rewrite whole on commit"))
-    val prev = currentPointer(table).getOrElse(
-      throw new IllegalStateException(s"table $table has no committed version"))
+    val (_, prev) = bucketedHead(table,
+      "snapshot tables rewrite whole on commit")
     val curDir = tableDir(table).resolve(dirNameOf(prev))
-    // same vanish window as compactBuckets' counts read: a gc-swept
-    // competitor publish mid-undo (or retention racing us) surfaces
-    // as the retryable conflict it is, never a raw I/O error
+    // the listed dir can VANISH under us in exactly one legitimate
+    // window: a competitor's publish was gc-swept and its undo has
+    // not landed yet (_CURRENT transiently names a deleted dir), or
+    // retention raced us — surface that as the retryable conflict it
+    // is (the shareUntouchedBuckets discipline), never a raw I/O error
+    def vanished(): Nothing = throw new ConcurrentCommitException(
+      s"current version $curDir vanished during maintenance — a " +
+        "competitor's swept publish is mid-undo; re-read and retry")
     val rewrite: Set[Int] =
       try manifestRowsDirect(curDir) match {
+        // manifest era: one driver-side sidecar parse, grouped in
+        // Scala — never a 10⁵-entry directory walk nor a Spark job
         case Some(rows) =>
           rows.flatMap(r => relBucketOf(r._1).map(b => (b, r._2)))
             .groupBy(_._1)
@@ -2339,28 +2169,36 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
             .toSet
         case None =>
           // pre-manifest version: count tier only, from the listing
-          listDir(curDir)
-            .filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith(s"$BucketCol="))
-            .map { p =>
-              p.getFileName.toString.stripPrefix(s"$BucketCol=").toInt ->
-                listDir(p).count(isDataFile)
-            }
-            .filter(_._2 > maxFilesPerBucket).map(_._1).toSet
+          bucketDirs(curDir)
+            .filter(d => listDir(d).count(isDataFile) > maxFilesPerBucket)
+            .map(bucketIdOf).toSet
       } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during auto-maintenance " +
-              "— a competitor's swept publish is mid-undo; re-read and retry")
+        case _: java.nio.file.NoSuchFileException => vanished()
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("does not exist") =>
-          throw new ConcurrentCommitException(
-            s"current version $curDir vanished during auto-maintenance " +
-              "— a competitor's swept publish is mid-undo; re-read and retry")
+              e.getMessage.contains("does not exist") => vanished()
       }
-    compactBucketSet(spark, table, rewrite, prev, clusterBy,
-      clusterRowsPerFile)
+    clusterBy.foreach { c =>
+      require(clusterRowsPerFile >= 1)
+      require(zoneColumns(table).exists(_.contains(c)),
+        s"compact clusterBy=$c: not a declared zone column of $table " +
+          s"(declared: ${zoneColumns(table).getOrElse(Seq.empty)}) — " +
+          "clustering exists to tighten the zone map's per-file ranges")
+    }
+    if (rewrite.nonEmpty) {
+      // each rewritten bucket is routed to ONE task, so partitionBy
+      // emits one part per bucket — or, clustered, sorted
+      // clusterRowsPerFile-row slices
+      val base = readBucketRestricted(spark, curDir, rewrite)
+        .filter(col(BucketCol).isin(rewrite.toSeq: _*))
+        .repartition(rewrite.size, col(BucketCol))
+      val laid = clusterBy.fold(base)(c =>
+        base.sortWithinPartitions(col(BucketCol), col(c)))
+      rewriteBuckets(spark, table, prev, rewrite, laid,
+        clusterBy.map(_ => "maxRecordsPerFile" -> clusterRowsPerFile.toString)
+          .toMap)
+    }
+    rewrite
   }
 
   /** ZERO-COPY CLONE: publish `dstTable` (first version) holding
@@ -2548,12 +2386,11 @@ final class ParquetTableStore(root: String, keepVersions: Int = 2,
       tableDir(table).resolve(staged))
 
   private def writeVersion(spark: SparkSession, table: String, df: DataFrame,
-      prev: Option[String], partitioned: Boolean): String = {
+      prev: Option[String]): String = {
     val staged = stagedDirName(prev.map(p => versionOf(dirNameOf(p))).getOrElse(-1L) + 1)
     val dir = tableDir(table).resolve(tmpName(staged))
-    val w = df.write.mode("errorifexists")
     guardedAction(s"commit of $table") {
-      (if (partitioned) w.partitionBy(BucketCol) else w).parquet(dir.toString)
+      df.write.mode("errorifexists").parquet(dir.toString)
     }
     writeSchemaFile(dir, df.schema)
     // snapshot commits rewrite everything — the zone map (when

@@ -103,17 +103,20 @@ object TextAnalysis {
     // and its subtree re-evaluates under several model branches —
     // an exchange there multiplies fixed cost, not parallelism.
     val test = Par.fanOut(test0)
-    val labeled = train.select(col(langCol).as("lang"),
-      charTrigrams(col(textCol)).as("t"))
-    // explicit isnotnull pins on the gram stream: charTrigrams never
-    // yields null grams, and a NULL train label never matched the
-    // (lang, g) scoring join or the per-lang tot join anyway (NULL ≠
-    // NULL) — the filters only make every gm consumer branch
-    // canonically EQUAL, so the train-side gram pass plans ONE
-    // exchange reused by the model join, the per-lang totals, and V
-    // (each branch re-ran the whole pass before: inferred join
-    // filters + pruned aggregate columns forked the subtrees — the
-    // ts12/ts18 mechanism, plans/r17/ts26_*)
+    // a NULL-labeled training row names no language: it is dropped
+    // HERE, once, so the grams (gm, V), the per-lang totals, the
+    // priors and n all describe the same rows — kept, it would form a
+    // NULL "language" in langStats that scores and can win the argmax
+    val labeled = train.filter(col(langCol).isNotNull)
+      .select(col(langCol).as("lang"), charTrigrams(col(textCol)).as("t"))
+    // explicit isnotnull pins on the gram stream are data no-ops
+    // (charTrigrams never yields null grams; NULL labels are gone
+    // above) — they only make every gm consumer branch canonically
+    // EQUAL, so the train-side gram pass plans ONE exchange reused by
+    // the model join, the per-lang totals, and V (each branch re-ran
+    // the whole pass before: inferred join filters + pruned aggregate
+    // columns forked the subtrees — the ts12/ts18 mechanism,
+    // plans/r17/ts26_*)
     val tx = labeled.select(col("lang"), explode(col("t")).as("g"))
       .filter(col("lang").isNotNull && col("g").isNotNull)
     val gm = tx.groupBy("lang", "g").agg(count(lit(1)).as("c"))

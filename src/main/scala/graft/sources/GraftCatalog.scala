@@ -280,7 +280,7 @@ final class GraftTable(spark: SparkSession, store: ParquetTableStore,
                       // the read and this commit fails the CAS and
                       // the retry re-reads — never a lost update
                       val (stored, pin) = store.readPinned(s, tableName)
-                      store.commitPinned(s, stored.unionByName(data), pin)
+                      store.commitPinned(s, stored.unionByName(data), pin)._1
                     }
                 }
               }

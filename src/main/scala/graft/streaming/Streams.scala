@@ -181,20 +181,17 @@ object Streams {
         // raises ConcurrentCommitException and the retry re-reads the
         // winner and re-merges, instead of silently overwriting it
         store.withCommitRetries() {
-          // create pins the CAS to ABSENCE (commitNew): a competitor
-          // creating the table between exists() and the publish raises
+          // an absent table pins the CAS to ABSENCE: a competitor
+          // creating the table between the read and the publish raises
           // ConcurrentCommitException and this retry re-reads + merges,
           // instead of silently replacing the competitor's rows
-          if (!store.exists(table)) store.commitNew(spark, table, incoming)
-          else {
-            val (stored, pin) = store.readPinned(spark, table)
-            store.commitPinned(spark,
-              Upserts.conditionalUpsert(stored, incoming,
-                Seq("video_id")) { (inc, old) =>
-                YtFunctions.hasTimestamps(inc("transcript")) ||
-                  !YtFunctions.hasTimestamps(old("transcript"))
-              }, pin)
-          }
+          val (stored, pin) = store.readPinnedOption(spark, table)
+          store.commitPinned(spark, stored.fold(incoming)(s =>
+            Upserts.conditionalUpsert(s, incoming,
+              Seq("video_id")) { (inc, old) =>
+              YtFunctions.hasTimestamps(inc("transcript")) ||
+                !YtFunctions.hasTimestamps(old("transcript"))
+            }), pin)
           ()
         }
         ()
@@ -1056,8 +1053,14 @@ object Streams {
           // downstream reads/anti-joins unconditional instead of
           // special-casing absence
           if (!store.exists(pairsTable))
-            try store.commitNew(spark, pairsTable, pairs.limit(0))
-            catch {
+            try {
+              // absence pinned: a table created since the check above
+              // is never replaced by this empty commit
+              val (existing, absent) =
+                store.readPinnedOption(spark, pairsTable)
+              if (existing.isEmpty)
+                store.commitPinned(spark, pairs.limit(0), absent)
+            } catch {
               // a competitor created it — the artifact exists, which
               // is all this guard needs
               case _: graft.ops.ConcurrentCommitException => ()
@@ -1175,14 +1178,14 @@ object Streams {
                     () => if (ded.limit(1).count() > 0)
                       Some(digestsTable ->
                         store.withCommitRetries()(
-                          store.upsertBucketedVersioned(spark, digestsTable,
+                          store.upsertBucketed(spark, digestsTable,
                             ded.select(col("fp"), col("id").as("keeper_id")),
                             Seq("fp"), numBuckets))._2)
                     else None,
                     () => if (survivors.limit(1).count() > 0)
                       Some(cleanTable ->
                         store.withCommitRetries()(
-                          store.upsertBucketedVersioned(spark, cleanTable,
+                          store.upsertBucketed(spark, cleanTable,
                             survivors, Seq("id"), numBuckets))._2)
                     else None)
                 // ledger+corpus marker (the generic multi-table

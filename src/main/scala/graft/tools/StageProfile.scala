@@ -26,15 +26,19 @@ object StageProfile {
     val lines = mutable.ArrayBuffer[String]()
     // jobId → callsite, stageId → jobId: the broadcast/commit stages
     // submitted from futures carry no graft frame in si.details, but
-    // the JOB's callsite (captured at submission) survives
+    // the JOB's callsite (captured at submission) survives. Map
+    // VALUES are boxed: a Scala Int/Long value type unboxes a missing
+    // key's null to 0, attributing an unknown stage to job 0 and an
+    // unknown job start to the epoch
     val jobSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val jobGraftSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     // job timeline: start/end wall times expose DRIVER GAPS (planning,
     // commit protocol, sidecar I/O) that per-stage metrics can't see
     val jobLines = mutable.ArrayBuffer[String]()
     val lastJobEnd = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobStartT = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobStartT =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -42,11 +46,12 @@ object StageProfile {
           .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
         jobSite.put(js.jobId, site)
         jobStartT.put(js.jobId, js.time)
-        js.stageIds.foreach(sid => stageJob.put(sid, js.jobId))
+        js.stageIds.foreach(sid => stageJob.put(sid, Int.box(js.jobId)))
       }
       override def onJobEnd(
           je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = Option(jobStartT.get(je.jobId)).getOrElse(je.time)
+        val st = Option(jobStartT.get(je.jobId)).map(_.longValue)
+          .getOrElse(je.time)
         val prev = lastJobEnd.getAndSet(je.time)
         val gap = if (prev == 0L) 0.0 else (st - prev) / 1e3
         jobLines += f"JOB ${je.jobId}%4d wall=${(je.time - st) / 1e3}%7.2fs " +
@@ -63,17 +68,16 @@ object StageProfile {
         val graftSite = si.details.linesIterator
           .find(l => l.contains("graft.") && !l.contains("graft.tools."))
           .map(_.trim.replaceAll("^at ", "").take(70)).getOrElse("")
+        val job = Option(stageJob.get(si.stageId)).map(_.intValue)
         if (graftSite.nonEmpty)
-          Option(stageJob.get(si.stageId)).foreach(j =>
-            jobGraftSite.putIfAbsent(j, graftSite))
+          job.foreach(j => jobGraftSite.putIfAbsent(j, graftSite))
         lines += f"STAGE ${si.stageId}%4d tasks=${si.numTasks}%4d wall=$wall%7.2fs " +
           f"cpu=${m.executorCpuTime / 1e9}%8.2fs run=${m.executorRunTime / 1e3}%8.2fs " +
           f"in=${m.inputMetrics.recordsRead}%9d sw=${m.shuffleWriteMetrics.bytesWritten / 1048576}%6dMB " +
           f"sr=${m.shuffleReadMetrics.totalBytesRead / 1048576}%6dMB " +
           f"spill=${m.diskBytesSpilled / 1048576}%5dMB  " +
           f"${si.name.takeWhile(_ != '\n').take(40)}  " +
-          f"job=${Option(stageJob.get(si.stageId)).map(j =>
-            jobSite.getOrDefault(j, "")).getOrElse("")}  $graftSite"
+          f"job=${job.map(j => jobSite.getOrDefault(j, "")).getOrElse("")}  $graftSite"
       }
     })
 

@@ -9,10 +9,18 @@ import graft.SparkSpec
 
 class IngestSpec extends SparkSpec {
 
+  /** A checked-in fixture (`src/test/resources/fixtures/`) as a
+    * filesystem path — stand-ins rebuilt from the reference's recorded
+    * formats (FIXTURES.md §A6, SURVEY.md §1.5), so the suite needs
+    * nothing outside the repo. */
+  private def fixture(name: String): java.nio.file.Path =
+    Paths.get(getClass.getResource(s"/fixtures/$name").toURI)
+
   // ---------------------------------------------------------- S2/S3
 
   test("S2: imports the reference's own playlists.json fixture") {
-    val df = PlaylistJson.importPlaylists(spark, "/root/reference/playlists.json")
+    val df = PlaylistJson.importPlaylists(spark,
+      fixture("playlists.json").toString)
     val n = df.count()
     assert(n >= 30, s"expected the ~30 committed entries, got $n")
     // every row normalized: id + title + url present
@@ -65,7 +73,7 @@ class IngestSpec extends SparkSpec {
 
   test("S5: parses the reference's sample timestamped transcript") {
     val content = new String(Files.readAllBytes(
-      Paths.get("/root/reference/sample_transcript_with_timestamps.txt")),
+      fixture("sample_transcript_with_timestamps.txt")),
       StandardCharsets.UTF_8)
     val p = TranscriptFiles.parseContent("sample.txt", content)
     assert(p.valid)

@@ -236,6 +236,53 @@ class PageRankSpec extends SparkSpec {
     assert(ex.getMessage.contains("stale"))
   }
 
+  test("pageRankAppend: a first build overtaken by a complete racing build fails its meta create") {
+    import java.util.concurrent.TimeUnit
+    val root = Scratch.tempDir("pr-first-race-")
+    val store = new ParquetTableStore(s"$root/store")
+    // B passes its existence check (nothing stored), then parks on its
+    // first evaluated row while C runs a COMPLETE first build; B then
+    // resumes its loop and publishes onto C's three tables
+    val gate = udf { (x: Long) =>
+      if (FirstBuildGate.armed.compareAndSet(true, false)) {
+        FirstBuildGate.reached.countDown()
+        FirstBuildGate.released.await(120, TimeUnit.SECONDS)
+      }
+      x
+    }
+    @volatile var competitorErr: Throwable = null
+    val competitor = new Thread(() => {
+      try {
+        assert(FirstBuildGate.reached.await(120, TimeUnit.SECONDS))
+        PageRank.pageRankAppend(Seq((1L, 2L), (2L, 3L)).toDF("s", "d"),
+          "s", "d", new ParquetTableStore(s"$root/store"), iterations = 2)
+      } catch { case t: Throwable => competitorErr = t }
+      finally FirstBuildGate.released.countDown()
+    })
+    FirstBuildGate.armed.set(true)
+    competitor.start()
+    try {
+      // B's meta create expects absence, so C's meta row makes it fail
+      // even though B's edges and ranks publishes landed on C's
+      intercept[ConcurrentCommitException] {
+        PageRank.pageRankAppend(
+          Seq((3L, 4L)).toDF("s", "d").withColumn("s", gate(col("s"))),
+          "s", "d", store, iterations = 2)
+      }
+    } finally competitor.join(120000)
+    assert(competitorErr == null, String.valueOf(competitorErr))
+    assert(!FirstBuildGate.armed.get)
+    // C's meta row survives, naming an edges version B has moved past:
+    // the next fold refuses loudly instead of folding onto B's ranks
+    assert(store.read(spark, "pr_meta").head.getAs[Long]("edges_version") <
+      store.currentVersion("pr_edges").get)
+    val ex = intercept[IllegalStateException] {
+      PageRank.pageRankAppend(Seq((8L, 9L)).toDF("s", "d"),
+        "s", "d", store, iterations = 2)
+    }
+    assert(ex.getMessage.contains("stale"))
+  }
+
   test("pageRankAppend: warm start reaches the same tol in fewer rounds than cold") {
     // power iteration contracts by ~damping per round regardless of
     // start; the warm win is the INITIAL distance — a small delta
@@ -269,4 +316,13 @@ class PageRankSpec extends SparkSpec {
     warm.foreach { case (id, v) =>
       assert(math.abs(v - cold(id)) < 2e-7, s"node $id: $v vs ${cold(id)}") }
   }
+}
+
+/** Park point for the first-build race spec: the first row the racing
+  * build evaluates waits here until the competitor's build has landed.
+  * A singleton, so the row function's closure captures no latch. */
+private object FirstBuildGate {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val reached = new java.util.concurrent.CountDownLatch(1)
+  val released = new java.util.concurrent.CountDownLatch(1)
 }

@@ -122,7 +122,7 @@ class ParquetTableStoreSpec extends SparkSpec {
 
     // delta: one existing key updated + one new key
     val delta = Seq(("k1", "v1-new"), ("k999", "fresh")).toDF("k", "v")
-    val out = store.upsertBucketed(spark, "t", delta, Seq("k"))
+    val (out, _) = store.upsertBucketed(spark, "t", delta, Seq("k"))
     val v1 = verDir(root, "t", 1)
     val after = inodesUnder(v1)
 
@@ -244,10 +244,10 @@ class ParquetTableStoreSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") &&
       plan.split("PartitionFilters", 2)(1).take(120).contains("__kb"),
       s"expected a __kb partition filter on the scan:\n$plan")
-    // version advances with an append and readWithVersion tracks it
+    // version advances with an append and readVersioned tracks it
     store.appendBucketed(spark, "idx",
       Seq(("termX", 999L)).toDF("term", "id"), Seq("term"))
-    val (all, v1) = store.readWithVersion(spark, "idx")
+    val (all, v1) = store.readVersioned(spark, "idx")
     assert(v1 == 1L && all.count() == 65)
     // snapshot tables refuse the bucket-pruned path
     store.commit(spark, "snap", Seq((1, "a")).toDF("k", "v"))
@@ -259,7 +259,8 @@ class ParquetTableStoreSpec extends SparkSpec {
   test("empty bucketed create stays readable; empty append is a version no-op") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val store = new ParquetTableStore(tmpDir("store-empty"))
+    val root = tmpDir("store-empty")
+    val store = new ParquetTableStore(root)
     val none = Seq.empty[(String, Long)].toDF("term", "id")
     // an empty create must not wedge the table (a rowless partitioned
     // write has NO files, and schema inference dies forever after)
@@ -270,6 +271,18 @@ class ParquetTableStoreSpec extends SparkSpec {
     // appending an empty delta onto it churns NO version ...
     store.appendBucketed(spark, "idx", none, Seq("term"))
     assert(store.currentVersion("idx").contains(0L))
+    // ... but an empty delta is schema-validated BEFORE the no-op: a
+    // drifted one refuses, publishes nothing and stages nothing
+    val drifted = Seq.empty[(String, String)].toDF("term", "id")
+    intercept[IllegalArgumentException] {
+      store.appendBucketed(spark, "idx", drifted, Seq("term"))
+    }
+    assert(store.currentVersion("idx").contains(0L))
+    assert(store.versions("idx") == Seq(0L))
+    val idxEntries = Files.list(Paths.get(root, "idx"))
+    try assert(!idxEntries.iterator().asScala
+      .exists(_.getFileName.toString.startsWith("tmp-")))
+    finally idxEntries.close()
     // ... and a real delta lands partitioned as usual, with the empty
     // version's root file left behind (layouts never mix)
     val grown = store.appendBucketed(spark, "idx",
@@ -351,7 +364,7 @@ class ParquetTableStoreSpec extends SparkSpec {
     val v0 = verDir(root, "t", 0)
     val before = inodesUnder(v0)
 
-    val out = store.upsertBucketed(spark, "t",
+    val (out, _) = store.upsertBucketed(spark, "t",
       Seq(("k1", "v1-new"), ("k999", "fresh")).toDF("k", "v"), Seq("k"))
     val after = inodesUnder(verDir(root, "t", 1))
 
@@ -1088,7 +1101,8 @@ class ParquetTableStoreSpec extends SparkSpec {
     val store = new ParquetTableStore(root)
     val df = (1 to 200).map(i => (i.toLong, i % 7))
       .toDF("k", "g").repartition(4)
-    store.commitZoneMapped(spark, "t", df, Seq("k"))
+    store.declareZoneColumns("t", Seq("k"))
+    store.commit(spark, "t", df)
     // sanity: the healthy read works
     assert(store.readZonePruned(spark, "t", "k", 10, 60).count() == 51)
     // tamper: drop ONE data file's row from the manifest (the desync

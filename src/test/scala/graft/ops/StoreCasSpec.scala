@@ -304,23 +304,27 @@ class StoreCasSpec extends SparkSpec {
   test("commitNew: a competitor creating the table between exists() and publish loses") {
     val root = tmpDir("cas-create-new")
     val store = new ParquetTableStore(root)
-    // the exists()-guarded create shape: checked absent here ...
-    assert(!store.exists("t"))
+    // the exists()-guarded create shape: checked absent here, the
+    // absence pinned ...
+    val (none, absent) = store.readPinnedOption(spark, "t")
+    assert(none.isEmpty && !store.exists("t") && absent.version.isEmpty)
     // ... competitor creates in between ...
-    store.commitNew(spark, "t", Seq((1L, "winner")).toDF("id", "v"))
+    store.commitPinned(spark, Seq((1L, "winner")).toDF("id", "v"),
+      store.readPinnedOption(spark, "t")._2)
     // ... and the guarded create must FAIL its CAS, not replace the
     // winner (plain commit would CAS against the pointer read at
-    // commit time and silently overwrite — the lost-update this
-    // method exists to close)
+    // commit time and silently overwrite — the lost-update the
+    // absence pin exists to close)
     intercept[ConcurrentCommitException] {
-      store.commitNew(spark, "t", Seq((2L, "loser")).toDF("id", "v"))
+      store.commitPinned(spark, Seq((2L, "loser")).toDF("id", "v"), absent)
     }
     assert(store.read(spark, "t").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "winner")))
     // the retry shape re-checks existence and merges instead
     store.withCommitRetries() {
-      if (!store.exists("t"))
-        store.commitNew(spark, "t", Seq((2L, "late")).toDF("id", "v"))
+      val (cur, pin) = store.readPinnedOption(spark, "t")
+      if (cur.isEmpty)
+        store.commitPinned(spark, Seq((2L, "late")).toDF("id", "v"), pin)
       else
         store.upsert(spark, "t", Seq((2L, "late")).toDF("id", "v"), Seq("id"))
     }
@@ -589,25 +593,30 @@ class StoreCasSpec extends SparkSpec {
   test("versioned commits return the version the call published") {
     import spark.implicits._
     val store = new ParquetTableStore(tmpDir("store-versioned"))
-    val (_, v0) = store.upsertBucketedVersioned(spark, "t",
+    val (_, v0) = store.upsertBucketed(spark, "t",
       Seq((1L, "a")).toDF("id", "v"), Seq("id"), numBuckets = 4)
     assert(v0 == store.currentVersion("t").get)
-    val (_, v1) = store.upsertBucketedVersioned(spark, "t",
+    val (_, v1) = store.upsertBucketed(spark, "t",
       Seq((2L, "b")).toDF("id", "v"), Seq("id"))
     assert(v1 == v0 + 1 && v1 == store.currentVersion("t").get)
     // empty delta: a version NO-OP reports the base it checked
     // against, never a re-read head
-    val (_, vNoop) = store.upsertBucketedVersioned(spark, "t",
+    val (_, vNoop) = store.upsertBucketed(spark, "t",
       Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
     assert(vNoop == v1)
-    // snapshot paths
-    val (_, s0) = store.commitNewVersioned(spark, "s",
-      Seq((1L, "a")).toDF("id", "v"))
+    // pinned paths report the same way
+    val (_, vPinned) = store.upsertBucketedPinned(spark,
+      Seq((3L, "c")).toDF("id", "v"), Seq("id"),
+      store.readPinned(spark, "t")._2)
+    assert(vPinned == v1 + 1 && vPinned == store.currentVersion("t").get)
+    // snapshot paths: an absence pin creates
+    val (_, s0) = store.commitPinned(spark,
+      Seq((1L, "a")).toDF("id", "v"), store.readPinnedOption(spark, "s")._2)
     assert(s0 == store.currentVersion("s").get)
-    val (_, pin) = store.readPinned(spark, "s")
-    assert(store.pinVersion(pin).contains(s0))
-    val (_, s1) = store.commitPinnedVersioned(spark,
-      Seq((2L, "b")).toDF("id", "v"), pin)
+    val (_, sPin) = store.readPinned(spark, "s")
+    assert(sPin.version.contains(s0))
+    val (_, s1) = store.commitPinned(spark,
+      Seq((2L, "b")).toDF("id", "v"), sPin)
     assert(s1 == s0 + 1 && s1 == store.currentVersion("s").get)
   }
 
@@ -621,7 +630,7 @@ class StoreCasSpec extends SparkSpec {
     // together, never a competitor's head woven in.
     val store = new ParquetTableStore(tmpDir("store-group-own"),
       keepVersions = 4)
-    val (_, vMine) = store.upsertBucketedVersioned(spark, "m",
+    val (_, vMine) = store.upsertBucketed(spark, "m",
       Seq((1L, "mine")).toDF("id", "v"), Seq("id"), numBuckets = 2)
     // competitor lands between W's member commit and W's marker swap
     store.upsertBucketed(spark, "m",

@@ -790,6 +790,33 @@ class TextPiiSpec extends SparkSpec {
     assert(scoredLangs.getString(1) == "en")
   }
 
+  test("trigramLangId: NULL-labeled training rows never score as a language") {
+    import spark.implicits._
+    val train = Seq(
+      (Some("en"), "the quick brown fox jumps over the lazy dog"),
+      (Some("en"), "children play in the park and sing old songs together"),
+      (Some("de"), "der schnelle braune fuchs springt über den faulen hund"),
+      (Some("de"), "die kinder spielen im park und singen alte lieder zusammen"),
+      (None, "qqqq zzzz qqqq zzzz"),
+      (None, "xxxx qqqq wwww"))
+      .toDF("lang", "text")
+    val test = Seq(
+      (1L, "we walk to the park and sing"),
+      (2L, "wir gehen in den park und singen"),
+      (3L, "qqqq zzzz xxxx"), // only the NULL-labeled rows' grams
+      (4L, "xy")).toDF("id", "text") // no trigram: priors only
+    def run(t: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.trigramLangId(t, "lang", "text", test, "id", "text")
+        .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2)))
+        .toMap
+    val got = run(train)
+    assert(got.size == 4 && got.values.forall(_._1 != null),
+      s"a NULL language was emitted: $got")
+    // identical to training without the NULL-labeled rows: they feed
+    // neither the grams, V, the priors nor n
+    assert(got == run(train.filter(col("lang").isNotNull)))
+  }
+
   test("dsirWeights: target-like docs weigh positive, off-domain negative, coverage total") {
     import spark.implicits._
     val corpus = Seq(
